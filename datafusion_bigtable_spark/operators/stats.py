@@ -53,6 +53,13 @@ def order_statistics_df(df: DataFrame, col: str, ranks: list[int]) -> DataFrame:
     tests/test_plan_contracts.py pins the final plan to one
     rangepartitioning exchange + ReusedExchange so a regression fails
     loudly instead of skewing ranks."""
+    ranks = [int(r) for r in ranks]
+    if not ranks:
+        # len(ranks) rows: none.  The rank filter below would otherwise
+        # be .filter(None), which Spark rejects.
+        return df.select(
+            F.lit(None).cast("bigint").alias("_rk"), F.col(col).alias("_v")
+        ).where(F.lit(False))
     spark = df.sparkSession
     p_conf = spark.conf.get("spark.sql.shuffle.partitions", "32")
     num_parts = int(p_conf) if str(p_conf).isdigit() else 32
@@ -79,7 +86,7 @@ def order_statistics_df(df: DataFrame, col: str, ranks: list[int]) -> DataFrame:
     # every one of their rows, so local ranks (and therefore the selected
     # values) are unchanged.
     hit = None
-    for r in [int(r) for r in ranks]:
+    for r in ranks:
         term = (F.col("_off") < F.lit(r)) & (F.lit(r) <= F.col("_off") + F.col("_c"))
         hit = term if hit is None else (hit | term)
     # Explicit-width exchange before the window (r18): the window's own
@@ -94,7 +101,7 @@ def order_statistics_df(df: DataFrame, col: str, ranks: list[int]) -> DataFrame:
         .filter(hit)
         .repartition(dp, "_pid")
         .withColumn("_rk", F.row_number().over(w_local) + F.col("_off"))
-        .filter(F.col("_rk").isin([int(r) for r in ranks]))
+        .filter(F.col("_rk").isin(ranks))
         .select("_rk", "_v")
     )
 

@@ -44,21 +44,29 @@ def decode_int_key(s: str) -> int:
     return int(s) - _OFFSET
 
 
-def decode_int_key_pandas(parts):
-    """Vectorized decode of a pandas Series of encoded components; NULLs
-    (truncated stored keys) stay NULL."""
+def decode_int_key_arrow(parts):
+    """Vectorized decode of an Arrow string array of encoded components;
+    NULLs (truncated stored keys) stay NULL.  The encoding of v is the
+    decimal of ``v + 2**63`` < 2⁶⁴, so it parses as uint64 and flipping
+    the sign bit of those 64 bits IS ``v``."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    def one(s):
-        if s is None or (isinstance(s, float) and np.isnan(s)):
-            return None
-        try:
-            return int(s) - _OFFSET
-        except (TypeError, ValueError):
-            return None  # malformed component → NULL, like operators/decode.py
+    try:
+        u = parts.cast(pa.uint64())
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        # a malformed component → NULL, like operators/decode.py
+        def one(s):
+            try:
+                v = int(s) - _OFFSET
+            except (TypeError, ValueError):
+                return None
+            return v if -_OFFSET <= v < _OFFSET else None
 
-    return pd.Series([one(s) for s in parts], index=parts.index, dtype="object")
+        return pa.array([one(s) for s in parts.to_pylist()], pa.int64())
+    valid = u.is_valid().to_numpy(zero_copy_only=False)
+    bits = u.fill_null(0).to_numpy().view(np.int64) ^ np.int64(-_OFFSET)
+    return pa.array(bits, mask=~valid)
 
 
 def decode_int_key_column(col):

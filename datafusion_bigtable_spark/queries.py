@@ -2588,7 +2588,60 @@ _R18_GREEN = (
     "text_token_counts",
     "text_fingerprint",
 )
-# Later rounds override earlier ones; every name absent from all eighteen
+# Round 19 verification window (CORRECTNESS_r19.json): 50/50 green.
+_R19_GREEN = (
+    "text_chunk_documents",
+    "corpus_pack_sequences",
+    "multimodal_features",
+    "multimodal_frame_sample",
+    "multimodal_pixel_stats",
+    "multimodal_video_frames",
+    "tpch_q5_local_supplier_volume",
+    "tpch_q6_revenue_change",
+    "tpch_q10_returned_items",
+    "ingest_jsonl_documents",
+    "text_bpe_tokenize",
+    "sim_topk_bruteforce",
+    "sim_topk_lsh_bucketed",
+    "sim_topk_ivf_cells",
+    "sim_topk_ivf_nprobe",
+    "sim_trained_codebook_recall",
+    "embedding_quantize_int8",
+    "text_curation_filter",
+    "union_all_entities",
+    "skew_salted_aggregation",
+    "approx_aggregates",
+    "grouping_sets_mixed",
+    "tpch_q4_order_priority",
+    "tpch_q7_volume_shipping",
+    "tpch_q14_promo_revenue",
+    "tpch_q18_large_orders",
+    "tpch_q19_disjunctive_revenue",
+    "deterministic_hash_sample",
+    "tpch_q8_market_share",
+    "tpch_q22_idle_rich_customers",
+    "text_top_bigrams",
+    "events_funnel_analysis",
+    "tpch_q15_top_supplier",
+    "tpch_q21_waiting_suppliers",
+    "tpch_q13_customer_distribution",
+    "winsorize_prices",
+    "multimodal_png_decode",
+    "text_boilerplate_ngrams",
+    "sim_index_upsert",
+    "sim_search_after_upsert",
+    "sim_index_drift",
+    "sim_index_retrain",
+    "bucketed_join_mktsegment",
+    "streaming_index_upsert",
+    "bucketed_agg_order_stats",
+    "shards_compact_roundtrip",
+    "sorted_shards_range_layout",
+    "sorted_shards_range_prune",
+    "bt_limit_pushdown",
+    "bt_ts_range_prune",
+)
+# Later rounds override earlier ones; every name absent from all nineteen
 # tuples carries 0.
 _LAST_GREEN: dict[str, int] = {
     **{n: 1 for n in _R1_GREEN},
@@ -2609,6 +2662,7 @@ _LAST_GREEN: dict[str, int] = {
     **{n: 16 for n in _R16_GREEN},
     **{n: 17 for n in _R17_GREEN},
     **{n: 18 for n in _R18_GREEN},
+    **{n: 19 for n in _R19_GREEN},
 }
 
 # ---------------------------------------------------------------------------
@@ -2751,6 +2805,12 @@ _TOUCHED_MODULES: frozenset[str] = frozenset(
         # a round-close full gate over the whole registry — a
         # _TOUCHED_MODULES reset of every optimized module's closure
         # would flood the 50-slot window many times over.)
+        #
+        # Since the r19 fold: the DS scan's Arrow pivot and full-scan
+        # file-group packing (six bt_* dependents re-verify).  The
+        # operators.stats ranks=[] guard is not listed: it only changes
+        # an input no registered query passes (it used to crash).
+        f"{_PKG}.sources.datasource",
     }
 )
 _TOUCHED_QUERIES: frozenset[str] = frozenset(
@@ -2793,20 +2853,11 @@ _FULLGATE_PROVEN_MODULES: dict[str, str] = {
     # entry did: the artifact no longer postdates the fold, and the r18
     # window plus earlier folds carry the dependents' driver greens.)
     #
-    # r19 (second optimization round): modules below received
-    # result-preserving performance edits; their dependent closures
-    # overflow the 50-slot window, so the evidence is FULLGATE_r19.json —
-    # regenerated over the FULL registry (every query green vs its DuckDB
-    # oracle at sf0.01) after the round's last edit.
-    f"{_PKG}.operators.retrieval": "FULLGATE_r19.json",
-    f"{_PKG}.operators.similarity": "FULLGATE_r19.json",
-    f"{_PKG}.operators.dedup": "FULLGATE_r19.json",
-    f"{_PKG}.operators.stats": "FULLGATE_r19.json",
-    f"{_PKG}.operators.graph": "FULLGATE_r19.json",
-    f"{_PKG}.operators.partitioning": "FULLGATE_r19.json",
-    f"{_PKG}.streaming.index_stream": "FULLGATE_r19.json",
-    f"{_PKG}.streaming.postings_stream": "FULLGATE_r19.json",
-    f"{_PKG}.streaming.takedown_stream": "FULLGATE_r19.json",
+    #
+    # (The r19 entries — retrieval/similarity/dedup/stats/graph/
+    # partitioning/index_stream/postings_stream/takedown_stream, all citing
+    # FULLGATE_r19.json — retired at the r19 fold, exactly as the r17 and
+    # r18 entries did.)
 }
 
 

@@ -13,22 +13,26 @@ and used as ``spark.read.format("bigtable")``:
 - ``partitions()`` — ONE InputPartition PER KeyRange.  The reference scans
   single-partition (``UnknownPartitioning(1)``, execute_plan.rs:84-86;
   roadmap gap README.md:50); here every composed range scans in parallel
-  on a different executor.  On a full scan, one partition per parquet
-  file of the store.
+  on a different executor.  On a full scan, the store's key-disjoint file
+  groups are packed into at most one partition per task slot of the
+  session (``register`` records ``defaultParallelism``): contiguous runs
+  in key order, balanced by bytes, so the scan finishes in one wave of
+  tasks instead of paying a second wave's per-task cost.
 - ``read()``       — per-partition: pyarrow scan of the cells parquet with
   family/key-range/qualifier predicates pushed into the parquet reader
   (the stand-in for the gRPC ``ReadRowsRequest`` + RowFilter chain,
   execute_plan.rs:168-183), then the latest-version filter, cell→row
-  pivot and typed decode (A11/A13/A15) — *partition-local*, because one
-  row key's cells never span two key ranges.  The pruned path therefore
-  runs with ZERO shuffles, where the DataFrame-assembly path
-  (bigtable_table.py) needs one.
+  pivot and typed decode (A11/A13/A15) in Arrow and numpy, the way
+  ``BigtableExec`` builds Arrow arrays straight from the cell stream —
+  *partition-local*, because one row key's cells never span two
+  partitions.  The pruned path therefore runs with ZERO shuffles, where
+  the DataFrame-assembly path (bigtable_table.py) needs one.
 
 Scale: at 100 TB the cells store is written range-partitioned and sorted
 by row_key (see sources/cells.py); ``partitions()`` maps ranges to the
 overlapping files only (parquet footer min/max — the emulation of
 Bigtable's tablet metadata), so a pruned query reads just those files, and
-the full-scan path parallelizes over files.
+the full-scan path parallelizes over runs of files.
 
 KNOWN UPSTREAM CAVEAT (Spark 4.1, verified by tracing worker invocations):
 the JVM caches a Python data source's planned scan
@@ -44,6 +48,7 @@ queries registry, tests) always do.
 from __future__ import annotations
 
 import glob
+import logging
 import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
@@ -72,6 +77,8 @@ from datafusion_bigtable_spark.plans.composer import (
 )
 
 FORMAT_NAME = "bigtable"
+_CELL_COLS = ["row_key", "qualifier", "ts", "value"]
+_log = logging.getLogger(__name__)
 
 
 class ScanReuseWarning(RuntimeWarning):
@@ -156,12 +163,13 @@ class WireRangePartition(InputPartition):
 
 @dataclass
 class FilePartition(InputPartition):
-    """Full-scan path: one key-disjoint GROUP of parquet files → one scan
-    task.  With a write_cells layout every group is a single file; after
-    appends, files whose key ranges overlap must scan together because the
-    latest-version filter and the (row_key, ts) pivot are partition-local
-    — splitting one row key's cells across tasks would resurrect stale
-    versions / emit partial rows (caught by the writer round-trip tests)."""
+    """Full-scan path: a key-ordered run of key-disjoint GROUPS of parquet
+    files → one scan task.  With a write_cells layout every group is a
+    single file; after appends, files whose key ranges overlap must scan
+    together because the latest-version filter and the (row_key, ts) pivot
+    are partition-local — splitting one row key's cells across tasks would
+    resurrect stale versions / emit partial rows (caught by the writer
+    round-trip tests).  ``files`` lists the run's files in key order."""
 
     files: tuple
     ts_lo: object = None
@@ -171,8 +179,12 @@ class FilePartition(InputPartition):
 
 
 class BigtableReader(DataSourceReader):
-    def __init__(self, schema, options):
+    def __init__(self, schema, options, task_slots: int | None = None):
         self.config = _config_from_options(options)
+        # The session's task slots (``register`` captures
+        # defaultParallelism): a full scan packs its file groups into at
+        # most this many partitions.  None = unknown → one per group.
+        self.task_slots = task_slots
         # Wire endpoint mode (r7): scan a live ReadRows service instead of
         # a parquet store.  The driver shards key space from SampleRowKeys;
         # every executor task opens its own connection for its shard.
@@ -609,10 +621,13 @@ class BigtableReader(DataSourceReader):
         stats = self._file_stats()
         if ts_push:
             stats = [st for st in stats if self._ts_overlaps(st, ts_lo, ts_hi)] or stats[:1]
-        return [
-            FilePartition(tuple(g), ts_lo, ts_hi, value_preds, rows_cap)
-            for g in _key_disjoint_groups(stats)
-        ]
+        groups = _key_disjoint_groups(stats)
+        runs = _pack_groups(groups, self.task_slots)
+        _log.debug(
+            "bigtable full scan: %d groups, %s task slots, %d partitions, files per partition %s",
+            len(groups), self.task_slots, len(runs), [len(r) for r in runs],
+        )
+        return [FilePartition(tuple(r), ts_lo, ts_hi, value_preds, rows_cap) for r in runs]
 
     def _wire_partitions(self, ranges, ts_lo, ts_hi, value_preds, rows_cap):
         """Shard the composed ranges (or the full key space) at
@@ -712,41 +727,23 @@ class BigtableReader(DataSourceReader):
         else:
             files = list(partition.files)
 
-        ordered = _key_sorted_order(files)
-        cols = ["row_key", "qualifier", "ts", "value"]
-        if ordered is None:
-            # Store not provably key-sorted (footer stats missing or row
-            # groups overlap): fall back to full materialization — correct
-            # for any layout, memory-bounded only by partition size.
-            dataset = pa_ds.dataset(files, format="parquet")
-            yield from _pivot_partition(dataset.to_table(columns=cols, filter=flt).to_pandas(), cfg)
-            return
-
-        # Streaming path (bounded memory): batches arrive key-grouped, so
-        # pivot everything up to the last (possibly incomplete) row key and
-        # carry that key's cells into the next batch.  write_cells() stores
-        # always qualify; at 100 TB an executor holds one Arrow batch plus
-        # one row key's cells, never the whole partition.
-        import pandas as pd
-
-        dataset = pa_ds.dataset(ordered, format="parquet")
-        carry = None
-        for batch in dataset.to_batches(columns=cols, filter=flt, batch_size=65536):
-            pdf = batch.to_pandas()
-            if len(pdf) == 0:
+        emitted = False
+        for seg, streamable in _scan_segments(files):
+            dataset = pa_ds.dataset(seg, format="parquet")
+            if not streamable:
+                # Segment not provably key-sorted (footer stats missing or
+                # files overlap): materialize it — correct for any layout,
+                # memory-bounded by the segment (one overlapping group).
+                yield from _pivot_partition(dataset.to_table(columns=_CELL_COLS, filter=flt), cfg)
+                emitted = True
                 continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_key = pdf["row_key"].iloc[-1]
-            boundary = pdf["row_key"] == last_key
-            flush, carry = pdf[~boundary], pdf[boundary]
-            if len(flush):
-                yield from _pivot_partition(flush, cfg)
-        if carry is not None and len(carry):
-            yield from _pivot_partition(carry, cfg)
-        elif carry is None:
+            batches = dataset.to_batches(columns=_CELL_COLS, filter=flt, batch_size=65536)
+            for batch in _stream_pivot(batches, cfg):
+                yield batch
+                emitted = True
+        if not emitted:
             # no rows at all: emit one empty batch for a stable schema
-            yield from _pivot_partition(pd.DataFrame(columns=cols), cfg)
+            yield from _pivot_partition(_empty_cells(), cfg)
 
     def _wire_scan(self, partition: WireRangePartition) -> Iterator:
         """Executor-side ReadRows over the wire for one shard: this task
@@ -760,7 +757,7 @@ class BigtableReader(DataSourceReader):
         matching the parquet path); the wire chain places value filters
         after the latest limit, so either gating is sound — Spark
         re-applies every filter above regardless (A16)."""
-        import pandas as pd
+        import pyarrow as pa
 
         from datafusion_bigtable_spark.sources.grpc_transport import (
             build_read_rows_request,
@@ -770,7 +767,7 @@ class BigtableReader(DataSourceReader):
         cfg = self.config
 
         def to_us(t):
-            return None if t is None else int(pd.Timestamp(t).value // 1_000)
+            return None if t is None else pa.scalar(t, pa.timestamp("us")).value
 
         lo_us, hi_us = to_us(partition.ts_lo), to_us(partition.ts_hi)
         req = build_read_rows_request(
@@ -787,20 +784,13 @@ class BigtableReader(DataSourceReader):
             rng["end_key_closed"] = partition.end.encode("utf-8")
         req["rows"] = {"row_keys": [], "row_ranges": [rng] if rng else []}
 
-        buf: dict[str, list] = {"row_key": [], "qualifier": [], "ts": [], "value": []}
+        buf: dict[str, list] = {c: [] for c in _CELL_COLS}
 
         def flush():
-            pdf = pd.DataFrame(
-                {
-                    "row_key": list(buf["row_key"]),
-                    "qualifier": list(buf["qualifier"]),
-                    "ts": pd.to_datetime(buf["ts"], unit="us"),
-                    "value": list(buf["value"]),
-                }
-            )
+            cells = _cells_table(buf)
             for v in buf.values():
                 v.clear()
-            yield from _pivot_partition(pdf, cfg)
+            yield from _pivot_partition(cells, cfg)
 
         client = WireBigtableClient(*partition.endpoint)
         pending = 0
@@ -845,130 +835,289 @@ def _key_disjoint_groups(stats: list[dict]) -> list[list[str]]:
     return groups
 
 
-def _key_sorted_order(files: list[str]):
-    """Return the files ordered by key range if footer statistics PROVE the
-    whole scan streams in non-decreasing row_key order (row groups sorted
-    and non-overlapping within each file; files pairwise disjoint).
-    Returns None when that cannot be proven — callers must materialize."""
+def _pack_groups(groups: list[list[str]], slots: int | None) -> list[list[str]]:
+    """Pack key-ordered file groups into at most ``slots`` contiguous runs
+    balanced by bytes, so a full scan runs in one wave of tasks: each
+    Python Data Source task carries a fixed cost of a few hundred ms, which
+    a second wave pays again.  Group ``g`` joins run
+    ``floor(slots * midpoint(g) / total_bytes)``, where ``midpoint(g)`` is
+    its middle byte in the store's key order.  Groups stay whole and in
+    order, so a run's groups are pairwise key-disjoint.  With no more
+    groups than slots, or slots unknown, every group is its own run."""
+    if not slots or len(groups) <= slots:
+        return groups
+    sizes = [sum(os.path.getsize(f) for f in g) or 1 for g in groups]
+    total = sum(sizes)
+    runs: list[list[str]] = []
+    last = None
+    before = 0
+    for g, size in zip(groups, sizes):
+        run = slots * (2 * before + size) // (2 * total)
+        if run != last:
+            runs.append([])
+            last = run
+        runs[-1].extend(g)
+        before += size
+    return runs
+
+
+def _scan_segments(files: list[str]) -> list[tuple[list[str], bool]]:
+    """Split a scan's files into key-ordered segments ``(files,
+    streamable)`` from footer statistics.  Files whose key ranges overlap
+    or touch form one segment, because a row key's cells must pivot
+    together; a segment is streamable when the statistics PROVE it reads
+    in non-decreasing row_key order (row groups sorted and non-overlapping
+    within each file, files not overlapping).  Adjacent streamable
+    segments merge, so a packed run of key-disjoint files streams as one.
+    A file without row_key statistics makes the whole scan one
+    non-streamable segment; a file without rows is left out."""
     import pyarrow.parquet as pq
 
     spans = []
     for f in files:
         meta = pq.ParquetFile(f).metadata
+        if meta.num_row_groups == 0:
+            continue
         idx = next(
             (i for i in range(meta.num_columns)
              if meta.row_group(0).column(i).path_in_schema == "row_key"),
             None,
         )
         if idx is None:
-            return None
-        prev_max = None
-        fmin = fmax = None
+            return [(files, False)]
+        sorted_rgs = True
+        prev_max = fmin = fmax = None
         for rg in range(meta.num_row_groups):
             st = meta.row_group(rg).column(idx).statistics
             if st is None or not st.has_min_max:
-                return None
+                return [(files, False)]
             # equality allowed: a key may span adjacent row groups; the
             # carry-over handles contiguous boundaries
             if prev_max is not None and st.min < prev_max:
-                return None
+                sorted_rgs = False
             prev_max = st.max
-            fmin = st.min if fmin is None else fmin
-            fmax = st.max
-        spans.append((fmin, fmax, f))
+            fmin = st.min if fmin is None else min(fmin, st.min)
+            fmax = st.max if fmax is None else max(fmax, st.max)
+        spans.append((fmin, fmax, f, sorted_rgs))
     spans.sort()
-    for (_, e1, _), (s2, _, _) in zip(spans, spans[1:]):
-        if s2 < e1:  # files overlap → interleaved keys across fragments
-            return None
-    return [f for _, _, f in spans]
+    clusters: list[tuple[list[str], bool]] = []
+    cur_max = None
+    for fmin, fmax, f, sorted_rgs in spans:
+        if clusters and fmin <= cur_max:
+            # touching is still streamable (the carry joins the key);
+            # a strict overlap interleaves keys across files
+            files_, ok = clusters[-1]
+            clusters[-1] = (files_ + [f], ok and sorted_rgs and fmin >= cur_max)
+            cur_max = max(cur_max, fmax)
+        else:
+            clusters.append(([f], sorted_rgs))
+            cur_max = fmax
+    segments: list[tuple[list[str], bool]] = []
+    for files_, ok in clusters:
+        if ok and segments and segments[-1][1]:
+            segments[-1][0].extend(files_)
+        else:
+            segments.append((list(files_), ok))
+    return segments
+
+
+def _stream_pivot(batches, cfg: BigtableTableConfig) -> Iterator:
+    """Pivot a key-sorted stream of cell batches with bounded memory:
+    pivot everything up to the last (possibly incomplete) row key and
+    carry that key's cells into the next batch.  At 100 TB an executor
+    holds one Arrow batch plus one row key's cells, never the partition."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    carry = None
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        cells = pa.Table.from_batches([batch])
+        if carry is not None:
+            cells = pa.concat_tables([carry, cells])
+        # key-sorted, so the last key's cells are the table's tail
+        cut = pc.index(cells.column("row_key"), cells.column("row_key")[-1]).as_py()
+        if cut:
+            yield from _pivot_partition(cells.slice(0, cut), cfg)
+        carry = cells.slice(cut)
+    if carry is not None:
+        yield from _pivot_partition(carry, cfg)
+
+
+def _cells_table(cols: dict):
+    """Column lists (ts as µs ints or datetimes) → an Arrow cells table."""
+    import pyarrow as pa
+
+    types = {
+        "row_key": pa.string(),
+        "qualifier": pa.string(),
+        "ts": pa.timestamp("us"),
+        "value": pa.binary(),
+    }
+    return pa.table({c: pa.array(cols[c], types[c]) for c in _CELL_COLS})
+
+
+def _empty_cells():
+    return _cells_table({c: [] for c in _CELL_COLS})
+
+
+def _arrow_schema(cfg: BigtableTableConfig):
+    import pyarrow as pa
+
+    types = {
+        "string": pa.string(),
+        "long": pa.int64(),
+        "binary": pa.binary(),
+        "double": pa.float64(),
+        "timestamp_ntz": pa.timestamp("us"),
+    }
+    return pa.schema([pa.field(f.name, types[f.dataType.typeName()]) for f in cfg.schema().fields])
+
+
+def _run_starts(*cols):
+    """numpy bool mask: row i starts a new run of equal values across
+    ``cols`` (numpy arrays of one length)."""
+    import numpy as np
+
+    starts = np.ones(len(cols[0]), dtype=bool)
+    for c in cols:
+        starts[1:] &= c[1:] == c[:-1]
+    starts[1:] = ~starts[1:]
+    return starts
+
+
+def _decode_int64(col):
+    """8-byte big-endian two's complement → int64 through a fixed-width
+    view; any other length (or NULL) decodes to NULL."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ok = pc.fill_null(pc.equal(pc.binary_length(col), 8), False)
+    fixed = col.filter(ok).cast(pa.binary(8))
+    vals = np.frombuffer(fixed.buffers()[1], dtype=">i8", count=len(fixed), offset=fixed.offset * 8)
+    okn = ok.to_numpy(zero_copy_only=False)
+    out = np.zeros(len(col), dtype=np.int64)
+    out[okn] = vals
+    return pa.array(out, mask=~okn)
+
+
+def _decode_utf8(col):
+    """Validated UTF-8 cast; only a batch holding invalid bytes pays the
+    per-value ``errors="replace"`` decode (U+FFFD, like the reference's
+    lossy String::from_utf8_lossy)."""
+    import pyarrow as pa
+
+    try:
+        return col.cast(pa.string())
+    except pa.ArrowInvalid:
+        return pa.array(
+            [None if b is None else b.decode("utf-8", errors="replace") for b in col.to_pylist()],
+            pa.string(),
+        )
+
+
+def _split_key(keys, cfg: BigtableTableConfig) -> list:
+    """Row keys → one Arrow array per key component.  Split on the literal
+    separator (never a regex — '||' must not explode keys char-by-char;
+    pivot.split_row_key re.escape()s for the same reason).  A short key
+    gets NULL tail components; ``a##`` keeps its trailing ``""``
+    components; extra components are dropped."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from datafusion_bigtable_spark.plans.keycodec import decode_int_key_arrow
+
+    pcols = cfg.table_partition_cols
+    ktypes = cfg.key_types or ("string",) * len(pcols)
+    if len(pcols) == 1:
+        comps = [keys]
+    else:
+        parts = pc.split_pattern(keys, cfg.table_partition_separator)
+        offsets = parts.offsets.to_numpy()
+        lengths = np.diff(offsets)
+        flat = parts.values
+        comps = []
+        for i in range(len(pcols)):
+            have = lengths > i
+            idx = np.where(have, offsets[:-1] + i, 0)
+            comps.append(flat.take(pa.array(idx, mask=~have)))
+    return [decode_int_key_arrow(c) if t == "int64" else c for c, t in zip(comps, ktypes)]
 
 
 def _pivot_partition(cells, cfg: BigtableTableConfig):
-    """Latest-filter + pivot + key-split + decode for one partition's cells,
-    in pandas (Arrow-batched back to Spark).  Mirrors execute_plan.rs:186-304
-    but emits NULL (None/NaN→None) for missing cells instead of empty bytes."""
-    import pandas as pd
+    """Latest-filter + pivot + key-split + decode for one partition's
+    cells (an Arrow table or batch of row_key, qualifier, ts, value), in
+    Arrow and numpy — the reference builds Arrow arrays straight from the
+    cell stream too (execute_plan.rs:186-304).  Emits NULL for missing
+    cells instead of empty bytes; output rows come in (row_key, ts)
+    order."""
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    spark_schema = cfg.schema()
-    arrow_fields = []
-    for f in spark_schema.fields:
-        t = f.dataType.typeName()
-        arrow_fields.append(
-            pa.field(
-                f.name,
-                {
-                    "string": pa.string(),
-                    "long": pa.int64(),
-                    "binary": pa.binary(),
-                    "double": pa.float64(),
-                    "timestamp_ntz": pa.timestamp("us"),
-                }[t],
-            )
-        )
-    arrow_schema = pa.schema(arrow_fields)
-
-    if len(cells) == 0:
-        yield pa.RecordBatch.from_pydict({f.name: [] for f in arrow_fields}, schema=arrow_schema)
+    schema = _arrow_schema(cfg)
+    if cells.num_rows == 0:
+        yield pa.RecordBatch.from_arrays([pa.array([], f.type) for f in schema], schema=schema)
         return
+    if isinstance(cells, pa.RecordBatch):
+        cells = pa.Table.from_batches([cells])
+    key = cells.column("row_key").combine_chunks()
+    n = len(key)
+    if n > 1 and pc.any(pc.less(key.slice(1), key.slice(0, n - 1))).as_py():
+        # stable, so equal keys keep their write order
+        cells = cells.take(pc.sort_indices(cells, [("row_key", "ascending")]))
+        key = cells.column("row_key").combine_chunks()
+    key_start = np.ones(n, dtype=bool)
+    key_start[1:] = pc.not_equal(key.slice(1), key.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+    key_id = np.cumsum(key_start)
+    qual = cells.column("qualifier").combine_chunks().dictionary_encode()
+    qual_id = qual.indices.to_numpy()
+    ts = cells.column("ts").combine_chunks()
+    if ts.type != pa.timestamp("us"):
+        ts = ts.cast(pa.timestamp("us"))
+    ts_us = ts.cast(pa.int64()).to_numpy()
 
-    # NULL-cell correctness (found in review): pandas groupby().last() and
-    # pivot_table() both SKIP NaN values, which would resurrect an older
-    # version's value under the newest timestamp and drop rows whose only
-    # cell value is NULL.  drop_duplicates + pivot are NaN-faithful and
-    # match the declarative path (latest_cells + pivot_cells) exactly.
-    cells = cells.sort_values("ts", kind="stable")
-    if cfg.only_read_latest:
-        cells = cells.drop_duplicates(["row_key", "qualifier"], keep="last")
-    # one cell per (row_key, ts, qualifier): last write wins, like the
-    # reference's HashMap insertion (execute_plan.rs:186-212)
-    cells = cells.drop_duplicates(["row_key", "ts", "qualifier"], keep="last")
-    wide = cells.pivot(index=["row_key", "ts"], columns="qualifier", values="value").reset_index()
+    # One cell per (row_key, qualifier, ts) — the LAST write wins, like the
+    # reference's HashMap insertion (execute_plan.rs:186-212); in latest
+    # mode one cell per (row_key, qualifier), the newest.  lexsort is
+    # stable, so among equal keys the later write sorts last.  A NULL
+    # newest value is kept as NULL: it never lets an older value through.
+    order = np.lexsort((ts_us, qual_id, key_id))
+    k, q, t = key_id[order], qual_id[order], ts_us[order]
+    starts = _run_starts(k, q) if cfg.only_read_latest else _run_starts(k, q, t)
+    keep = order[np.append(starts[1:], True)]
 
-    out: dict[str, object] = {}
-    keys = wide["row_key"].astype(str)
-    ktypes = cfg.key_types or ("string",) * len(cfg.table_partition_cols)
+    # pivot: one output row per (row_key, ts); each declared qualifier's
+    # cell is gathered into its row slot with take
+    keep = keep[np.lexsort((ts_us[keep], key_id[keep]))]
+    row_start = _run_starts(key_id[keep], ts_us[keep])
+    row_id = np.cumsum(row_start) - 1
+    first = keep[row_start]
+    n_rows = len(first)
 
-    def _component(series, i):
-        if ktypes[i] != "int64":
-            return series
-        from datafusion_bigtable_spark.plans.keycodec import decode_int_key_pandas
-
-        return decode_int_key_pandas(series)
-
-    if len(cfg.table_partition_cols) == 1:
-        out[cfg.table_partition_cols[0]] = _component(keys, 0)
-    else:
-        # regex=False: pandas treats multi-char patterns as regex by default,
-        # which would split wrongly for separators like '||' — the DataFrame
-        # path (pivot.split_row_key) re.escape()s; both must agree.
-        parts = keys.str.split(cfg.table_partition_separator, expand=True, regex=False)
-        for i, name in enumerate(cfg.table_partition_cols):
-            col = parts[i] if i in parts.columns else pd.Series([None] * len(wide))
-            out[name] = _component(col, i)
-    out["_timestamp"] = wide["ts"]
-
+    out = _split_key(key.take(pa.array(first)), cfg)
+    out.append(ts.take(pa.array(first)))
+    value = cells.column("value").combine_chunks()
+    if value.type != pa.binary():
+        value = value.cast(pa.binary())
+    codes = {name: i for i, name in enumerate(qual.dictionary.to_pylist())}
+    kept_q = qual_id[keep]
     for spec in cfg.columns:
-        if spec.name in wide.columns:
-            raw = wide[spec.name]
-        else:
-            raw = pd.Series([None] * len(wide))
+        slot = np.full(n_rows, -1, dtype=np.int64)
+        code = codes.get(spec.name)
+        if code is not None:
+            mine = kept_q == code
+            slot[row_id[mine]] = keep[mine]
+        col = value.take(pa.array(slot, mask=slot < 0))
         if spec.type in ("int64", "long"):
-            out[spec.name] = raw.map(
-                lambda b: int.from_bytes(b, "big", signed=True)
-                if isinstance(b, (bytes, bytearray)) and len(b) == 8
-                else None
-            )
-        elif spec.type == "binary":
-            out[spec.name] = raw.map(lambda b: bytes(b) if isinstance(b, (bytes, bytearray)) else None)
-        else:
-            out[spec.name] = raw.map(
-                lambda b: b.decode("utf-8", errors="replace")
-                if isinstance(b, (bytes, bytearray))
-                else None
-            )
-
-    yield pa.RecordBatch.from_pandas(pd.DataFrame(out), schema=arrow_schema, preserve_index=False)
+            col = _decode_int64(col)
+        elif spec.type != "binary":
+            col = _decode_utf8(col)
+        out.append(col)
+    yield pa.RecordBatch.from_arrays(out, schema=schema)
 
 
 @dataclass
@@ -1337,13 +1486,11 @@ class BigtableStreamReader(DataSourceStreamReader):
         return [StreamFilesPartition(tuple(g)) for g in groups]
 
     def read(self, partition: StreamFilesPartition) -> Iterator:
-        import pandas as pd
         import pyarrow.dataset as pa_ds
 
         cfg = self.config
-        cols = ["row_key", "qualifier", "ts", "value"]
         if not partition.files:
-            yield from _pivot_partition(pd.DataFrame(columns=cols), cfg)
+            yield from _pivot_partition(_empty_cells(), cfg)
             return
         flt = (pa_ds.field("family") == cfg.column_family) & pa_ds.field("qualifier").isin(
             list(cfg.qualifiers)
@@ -1351,9 +1498,9 @@ class BigtableStreamReader(DataSourceStreamReader):
         # ONE pivot over the whole group's cells: a (row_key, ts) split
         # across the group's files merges into one relational row
         table = pa_ds.dataset(list(partition.files), format="parquet").to_table(
-            columns=cols, filter=flt
+            columns=_CELL_COLS, filter=flt
         )
-        yield from _pivot_partition(table.to_pandas(), cfg)
+        yield from _pivot_partition(table, cfg)
 
     def commit(self, end: dict) -> None:
         pass
@@ -1376,6 +1523,8 @@ class BigtableDataSource(DataSource):
     are invisible to the source — do not combine them with rows_limit.
     """
 
+    task_slots: int | None = None  # set per session by register()
+
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
@@ -1384,7 +1533,7 @@ class BigtableDataSource(DataSource):
         return _config_from_options(self.options).schema()
 
     def reader(self, schema) -> DataSourceReader:
-        return BigtableReader(schema, self.options)
+        return BigtableReader(schema, self.options, self.task_slots)
 
     def writer(self, schema, overwrite: bool) -> DataSourceWriter:
         return BigtableWriter(schema, self.options, overwrite)
@@ -1404,6 +1553,16 @@ class BigtableDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the format + enable python filter pushdown for this session."""
-    spark.dataSource.register(BigtableDataSource)
+    """Register the format + enable python filter pushdown for this session.
+
+    Spark tells a planning worker nothing about the session's parallelism,
+    so the session's task slots (``defaultParallelism``) ride along as an
+    attribute of a per-session subclass — the full-scan packing input."""
+    try:
+        slots = spark.sparkContext.defaultParallelism
+    except NotImplementedError:  # Spark Connect has no SparkContext: plan unpacked
+        slots = None
+    spark.dataSource.register(
+        type("SessionBigtableDataSource", (BigtableDataSource,), {"task_slots": slots})
+    )
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")

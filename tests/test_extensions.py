@@ -1531,6 +1531,18 @@ def test_order_statistics_rank_interval_pruning_boundaries(spark):
         assert got[r] == want[r - 1], f"rank {r}: got {got[r]} want {want[r-1]}"
 
 
+def test_order_statistics_empty_ranks_is_empty_frame(spark):
+    """No ranks requested → zero rows with the (_rk, _v) schema, not a
+    crash on an empty rank filter."""
+    from datafusion_bigtable_spark.operators.stats import order_statistics_df
+
+    df = spark.createDataFrame([(3,), (1,), (None,)], "x long")
+    out = order_statistics_df(df, "x", [])
+    assert out.columns == ["_rk", "_v"]
+    assert out.schema["_v"].dataType == df.schema["x"].dataType
+    assert out.collect() == []
+
+
 def test_grouped_exact_percentiles_extreme_ps(spark):
     """r19 pruning edge: p=0.0 (rank 1) and p=1.0 (rank n, whose n+1
     neighbor exists in no partition) must survive the live-slice prune

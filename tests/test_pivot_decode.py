@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from datafusion_bigtable_spark.operators.decode import decode_int64_be, encode_int64_be
@@ -128,7 +130,7 @@ def test_pandas_pivot_multichar_separator_parity():
     # default, so a separator like '||' (regex: two empty alternations)
     # exploded every key char-by-char — inconsistent with split_row_key,
     # which re.escape()s.  Both paths must split literally.
-    import pandas as pd
+    import pyarrow as pa
 
     from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
     from datafusion_bigtable_spark.sources.datasource import _pivot_partition
@@ -140,12 +142,15 @@ def test_pandas_pivot_multichar_separator_parity():
         table_partition_cols=("region", "balloon_id"),
         table_partition_separator="||",
     )
-    cells = pd.DataFrame(
+    cells = pa.table(
         {
             "row_key": ["us-west2||3698", "us-east1||0042"],
             "qualifier": ["temperature", "temperature"],
-            "ts": [pd.Timestamp("2021-03-05 12:00:05"), pd.Timestamp("2021-03-05 12:00:06")],
-            "value": [b"9.6", b"7.1"],
+            "ts": pa.array(
+                [dt.datetime(2021, 3, 5, 12, 0, 5), dt.datetime(2021, 3, 5, 12, 0, 6)],
+                pa.timestamp("us"),
+            ),
+            "value": pa.array([b"9.6", b"7.1"], pa.binary()),
         }
     )
     (batch,) = list(_pivot_partition(cells, cfg))
@@ -169,3 +174,142 @@ def test_schema_tail_key_components_nullable():
     assert fields["a"] is False
     assert fields["b"] is True and fields["c"] is True
     assert fields["_timestamp"] is False
+
+
+# -- the Data Source's Arrow pivot (sources/datasource.py::_pivot_partition)
+
+
+def _ds_cfg(latest=True, pcols=("a", "b", "c"), sep="#", key_types=None):
+    from datafusion_bigtable_spark.config import BigtableTableConfig, ColumnSpec
+
+    return BigtableTableConfig(
+        table="t",
+        column_family="f",
+        columns=(ColumnSpec("p", "int64"), ColumnSpec("s", "string"), ColumnSpec("raw", "binary")),
+        table_partition_cols=pcols,
+        table_partition_separator=sep,
+        only_read_latest=latest,
+        key_types=key_types,
+    )
+
+
+def _ds_pivot(cells, cfg):
+    """(row_key, qualifier, ts, value) tuples → the pivot's rows as dicts."""
+    import pyarrow as pa
+
+    from datafusion_bigtable_spark.sources.datasource import _pivot_partition
+
+    table = pa.table(
+        {
+            "row_key": pa.array([c[0] for c in cells], pa.string()),
+            "qualifier": pa.array([c[1] for c in cells], pa.string()),
+            "ts": pa.array([c[2] for c in cells], pa.timestamp("us")),
+            "value": pa.array([c[3] for c in cells], pa.binary()),
+        }
+    )
+    (batch,) = list(_pivot_partition(table, cfg))
+    return batch
+
+
+_P5 = (5).to_bytes(8, "big", signed=True)
+_P7 = (7).to_bytes(8, "big", signed=True)
+_PNEG = (-(2**40) - 7).to_bytes(8, "big", signed=True)
+
+
+@pytest.mark.parametrize(
+    "case,cfg,cells,want",
+    [
+        (
+            "null newest cell does not bring back the older value",
+            _ds_cfg(),
+            [("x#y#z", "p", T0, _P5), ("x#y#z", "p", T1, None)],
+            [{"a": "x", "b": "y", "c": "z", "_timestamp": T1, "p": None, "s": None, "raw": None}],
+        ),
+        (
+            "duplicate (row_key, ts, qualifier) keeps the last write (latest)",
+            _ds_cfg(),
+            [("x#y#z", "p", T0, _P5), ("x#y#z", "p", T0, _P7)],
+            [{"a": "x", "b": "y", "c": "z", "_timestamp": T0, "p": 7, "s": None, "raw": None}],
+        ),
+        (
+            "duplicate (row_key, ts, qualifier) keeps the last write (unnest)",
+            _ds_cfg(latest=False),
+            [("x#y#z", "p", T0, _P7), ("x#y#z", "p", T1, _P5), ("x#y#z", "p", T0, _P5)],
+            [
+                {"a": "x", "b": "y", "c": "z", "_timestamp": T0, "p": 5, "s": None, "raw": None},
+                {"a": "x", "b": "y", "c": "z", "_timestamp": T1, "p": 5, "s": None, "raw": None},
+            ],
+        ),
+        (
+            "7- and 9-byte ints decode to NULL, 8-byte negatives decode",
+            _ds_cfg(latest=False),
+            [("k1#b#c", "p", T0, b"\x00" * 7), ("k2#b#c", "p", T0, b"\x00" * 9), ("k3#b#c", "p", T0, _PNEG)],
+            [
+                {"a": "k1", "b": "b", "c": "c", "_timestamp": T0, "p": None, "s": None, "raw": None},
+                {"a": "k2", "b": "b", "c": "c", "_timestamp": T0, "p": None, "s": None, "raw": None},
+                {"a": "k3", "b": "b", "c": "c", "_timestamp": T0, "p": -(2**40) - 7, "s": None, "raw": None},
+            ],
+        ),
+        (
+            "invalid UTF-8 decodes to U+FFFD, binary passes through",
+            _ds_cfg(),
+            [("x#y#z", "s", T0, b"\xffok"), ("x#y#z", "raw", T0, b"\xff\x00")],
+            [{"a": "x", "b": "y", "c": "z", "_timestamp": T0, "p": None, "s": "\ufffdok", "raw": b"\xff\x00"}],
+        ),
+        (
+            "short key gets NULL tail components; a## keeps trailing empties",
+            _ds_cfg(),
+            [("a", "s", T0, b"1"), ("a##", "s", T0, b"2"), ("a#b#c#d", "s", T0, b"3")],
+            [
+                {"a": "a", "b": None, "c": None, "_timestamp": T0, "p": None, "s": "1", "raw": None},
+                {"a": "a", "b": "", "c": "", "_timestamp": T0, "p": None, "s": "2", "raw": None},
+                {"a": "a", "b": "b", "c": "c", "_timestamp": T0, "p": None, "s": "3", "raw": None},
+            ],
+        ),
+        (
+            "'||' separator splits literally; int64 key components decode",
+            _ds_cfg(pcols=("a", "n"), sep="||", key_types=("string", "int64")),
+            [
+                ("r||09223372036854775803", "s", T0, b"v"),
+                ("r||09223372036854775813", "s", T0, b"w"),
+                ("r||junk", "s", T0, b"j"),
+            ],
+            [
+                {"a": "r", "n": -5, "_timestamp": T0, "p": None, "s": "v", "raw": None},
+                {"a": "r", "n": 5, "_timestamp": T0, "p": None, "s": "w", "raw": None},
+                {"a": "r", "n": None, "_timestamp": T0, "p": None, "s": "j", "raw": None},
+            ],
+        ),
+        (
+            "qualifiers at different latest timestamps fan out into rows",
+            _ds_cfg(),
+            [("x#y#z", "p", T0, _P5), ("x#y#z", "s", T1, b"t"), ("x#y#z", "s", T0, b"old")],
+            [
+                {"a": "x", "b": "y", "c": "z", "_timestamp": T0, "p": 5, "s": None, "raw": None},
+                {"a": "x", "b": "y", "c": "z", "_timestamp": T1, "p": None, "s": "t", "raw": None},
+            ],
+        ),
+    ],
+    ids=lambda v: v if isinstance(v, str) else "",
+)
+def test_ds_pivot_decode_table(case, cfg, cells, want):
+    assert _ds_pivot(cells, cfg).to_pylist() == want, case
+
+
+def test_ds_pivot_empty_input_keeps_schema():
+    import pyarrow as pa
+
+    cfg = _ds_cfg(key_types=("string", "int64", "string"))
+    batch = _ds_pivot([], cfg)
+    assert batch.num_rows == 0
+    assert batch.schema == pa.schema(
+        [
+            ("a", pa.string()),
+            ("b", pa.int64()),
+            ("c", pa.string()),
+            ("_timestamp", pa.timestamp("us")),
+            ("p", pa.int64()),
+            ("s", pa.string()),
+            ("raw", pa.binary()),
+        ]
+    )

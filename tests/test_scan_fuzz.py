@@ -51,6 +51,7 @@ PRESSURES = [-(2**40) - 7, -5, 0, 7, 94558, 2**41 + 3]
 TEMPS = ["-1.5", "9.6", "21.0", ""]
 BASE_TS = dt.datetime(2021, 3, 5, 12, 0, 0)
 N_SHAPES = 12
+N_FILES = 8
 
 
 def _gen_cells(rng: random.Random) -> list[tuple[str, str, dt.datetime, bytes]]:
@@ -210,6 +211,44 @@ def fuzz_cells_path(tmp_path_factory) -> str:
     return path
 
 
+@pytest.fixture(scope="module")
+def fuzz_cells_store(tmp_path_factory) -> str:
+    """The same cells as a multi-file store plus its manifest: N_FILES
+    key-disjoint files, except that the middle cut splits one key's cells
+    across two touching files (they must scan as one group).  With more
+    groups than the test session's task slots, a full format("bigtable")
+    scan packs file groups."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_bigtable_spark.sources.cells import write_manifest
+
+    rows = sorted(_CELLS)
+    starts = [i for i in range(len(rows)) if i == 0 or rows[i][0] != rows[i - 1][0]]
+    cuts = [starts[len(starts) * k // N_FILES] for k in range(1, N_FILES)]
+    mid = N_FILES // 2 - 1
+    cuts[mid] += 1  # inside a key that has at least two cells
+    assert rows[cuts[mid]][0] == rows[cuts[mid] - 1][0]
+    bounds = [0, *cuts, len(rows)]
+    store = tmp_path_factory.mktemp("fuzz_store")
+    for i in range(N_FILES):
+        part = rows[bounds[i] : bounds[i + 1]]
+        pq.write_table(
+            pa.table(
+                {
+                    "row_key": [r[0] for r in part],
+                    "family": [FAMILY] * len(part),
+                    "qualifier": [r[1] for r in part],
+                    "ts": pa.array([r[2] for r in part], type=pa.timestamp("us")),
+                    "value": pa.array([r[3] for r in part], type=pa.binary()),
+                }
+            ),
+            str(store / f"part-{i}.parquet"),
+        )
+    write_manifest(str(store))
+    return str(store)
+
+
 def _config(cells_path, latest: bool = True) -> BigtableTableConfig:
     return BigtableTableConfig(
         table="fuzz_scan",
@@ -295,3 +334,47 @@ def test_version_unnest_matches_bruteforce_model(
     assert sorted((tuple(r) for r in got.collect()), key=repr) == _model_unnest(
         _CELLS, preds, value_cut, proj
     )
+
+
+def _ds_frame(spark, store, latest: bool):
+    from datafusion_bigtable_spark.sources.datasource import register
+
+    register(spark)
+    return (
+        spark.read.format("bigtable")
+        .option("path", store)
+        .option("column_family", FAMILY)
+        .option("columns", "pressure:int64,temperature:string")
+        .option("table_partition_cols", ",".join(PCOLS))
+        .option("only_read_latest", str(latest).lower())
+        .option("allow_full_scan", "true")
+        .load()
+    )
+
+
+@pytest.mark.parametrize("latest", [True, False], ids=["latest", "unnest"])
+@pytest.mark.parametrize("shape_idx", range(N_SHAPES))
+def test_datasource_matches_bruteforce_model(spark, fuzz_cells_store, latest, shape_idx):
+    """The same shapes through spark.read.format("bigtable") over a
+    multi-file parquet store: SQL predicates reach the composer through
+    pushFilters (key ranges) or fall back to a packed full scan, and the
+    Arrow pivot decodes every row — against the same brute-force model."""
+    preds, _reg_preds, clauses, value_cut, proj = _SHAPES[shape_idx]
+    _ds_frame(spark, fuzz_cells_store, latest).createOrReplaceTempView("fuzz_ds")
+    where = f" WHERE {' AND '.join(clauses)}" if clauses else ""
+    got = spark.sql(f"SELECT {', '.join(proj)} FROM fuzz_ds{where}")
+    model = _model if latest else _model_unnest
+    assert sorted((tuple(r) for r in got.collect()), key=repr) == model(
+        _CELLS, preds, value_cut, proj
+    )
+
+
+def test_datasource_full_scan_packs_to_task_slots(spark, fuzz_cells_store):
+    from datafusion_bigtable_spark.sources.cells import read_manifest
+    from datafusion_bigtable_spark.sources.datasource import _key_disjoint_groups
+
+    groups = _key_disjoint_groups(read_manifest(fuzz_cells_store))
+    slots = spark.sparkContext.defaultParallelism
+    assert len(groups) > slots, "store too small to exercise packing"
+    df = _ds_frame(spark, fuzz_cells_store, True)
+    assert df.rdd.getNumPartitions() == slots
