@@ -72,6 +72,8 @@ def split_row_key(
 ) -> DataFrame:
     """Composite row key → one string column per component (reference
     src/execute_plan.rs:226-251; single-component keys skip the split)."""
+    if not partition_cols:
+        raise ValueError("table_partition_cols must be non-empty")
     if len(partition_cols) == 1:
         return df.withColumn(partition_cols[0], F.col(key_col))
     # -1 limit: trailing empty components are preserved, like Rust's split.
@@ -84,6 +86,8 @@ def split_row_key(
 def compose_row_key(cols: Sequence[Column | str], separator: str = "#") -> Column:
     """Components → composite key (reference composer.rs:141 ``parts.join``)."""
     norm = [F.col(c) if isinstance(c, str) else c for c in cols]
+    if not norm:
+        raise ValueError("table_partition_cols must be non-empty")
     if len(norm) == 1:
         return norm[0].cast("string")
     return F.concat_ws(separator, *[c.cast("string") for c in norm])

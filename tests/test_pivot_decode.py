@@ -99,6 +99,19 @@ def test_split_and_compose_row_key(spark):
     assert key == "a#b#3"
 
 
+def test_compose_row_key_rejects_empty_components():
+    # concat_ws over no columns would yield "" for every row.
+    with pytest.raises(ValueError, match="table_partition_cols must be non-empty"):
+        compose_row_key([])
+
+
+def test_split_row_key_rejects_empty_components(spark):
+    # An empty split would return the frame with no component columns.
+    df = spark.createDataFrame([("a#b",)], "row_key string")
+    with pytest.raises(ValueError, match="table_partition_cols must be non-empty"):
+        split_row_key(df, [])
+
+
 def test_split_preserves_trailing_empty(spark):
     df = spark.createDataFrame([("a##",)], "row_key string")
     out = split_row_key(df, ["x", "y", "z"]).collect()[0]

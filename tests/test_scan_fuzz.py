@@ -336,13 +336,13 @@ def test_version_unnest_matches_bruteforce_model(
     )
 
 
-def _ds_frame(spark, store, latest: bool):
+def _ds_frame(spark, location, latest: bool, source: str = "path"):
     from datafusion_bigtable_spark.sources.datasource import register
 
     register(spark)
     return (
         spark.read.format("bigtable")
-        .option("path", store)
+        .option(source, location)
         .option("column_family", FAMILY)
         .option("columns", "pressure:int64,temperature:string")
         .option("table_partition_cols", ",".join(PCOLS))
@@ -359,14 +359,39 @@ def test_datasource_matches_bruteforce_model(spark, fuzz_cells_store, latest, sh
     multi-file parquet store: SQL predicates reach the composer through
     pushFilters (key ranges) or fall back to a packed full scan, and the
     Arrow pivot decodes every row — against the same brute-force model."""
+    df = _ds_frame(spark, fuzz_cells_store, latest)
+    _assert_ds_matches_model(spark, df, latest, shape_idx)
+
+
+def _assert_ds_matches_model(spark, df, latest: bool, shape_idx: int) -> None:
     preds, _reg_preds, clauses, value_cut, proj = _SHAPES[shape_idx]
-    _ds_frame(spark, fuzz_cells_store, latest).createOrReplaceTempView("fuzz_ds")
+    df.createOrReplaceTempView("fuzz_ds")
     where = f" WHERE {' AND '.join(clauses)}" if clauses else ""
     got = spark.sql(f"SELECT {', '.join(proj)} FROM fuzz_ds{where}")
     model = _model if latest else _model_unnest
     assert sorted((tuple(r) for r in got.collect()), key=repr) == model(
         _CELLS, preds, value_cut, proj
     )
+
+
+@pytest.fixture(scope="module")
+def fuzz_wire_addr(fuzz_cells_path):
+    from datafusion_bigtable_spark.sources.fake_bigtable import service_from_parquet
+    from datafusion_bigtable_spark.sources.wire import WireBigtableServer
+
+    with WireBigtableServer(service_from_parquet(fuzz_cells_path)) as srv:
+        yield f"{srv.address[0]}:{srv.address[1]}"
+
+
+@pytest.mark.parametrize("latest", [True, False], ids=["latest", "unnest"])
+@pytest.mark.parametrize("shape_idx", range(N_SHAPES))
+def test_wire_datasource_matches_bruteforce_model(spark, fuzz_wire_addr, latest, shape_idx):
+    """The same shapes through format("bigtable") over a live ReadRows
+    endpoint: pushed key ranges become RowSets, the driver shards at
+    SampleRowKeys boundaries, and each task streams its shard over the
+    wire into the shared Arrow pivot — against the same model."""
+    df = _ds_frame(spark, fuzz_wire_addr, latest, source="endpoint")
+    _assert_ds_matches_model(spark, df, latest, shape_idx)
 
 
 def test_datasource_full_scan_packs_to_task_slots(spark, fuzz_cells_store):

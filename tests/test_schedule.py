@@ -1,17 +1,18 @@
-"""Pins for the driver-window verification schedule (queries.py::_schedule).
+"""Pins for the driver-window verification schedule (schedule.py::_schedule).
 
 The correctness driver checks only the first 50 entries of queries()
-iteration order, so the schedule IS the verification rotation.  Round 3's
-judge found the reset policy was applied by query-function diff only —
-module changes (operators/graph.py, sources/bigtable_table.py) did not
-reset their dependents.  Round 4 computes dependencies from the AST
-(queries.py::query_deps); these tests pin that engine against known ground
+iteration order, so the schedule IS the verification rotation.  Each
+query's last driver-green round is derived from the committed
+CORRECTNESS_r{N}.json artifacts, and module changes reset their dependents
+through an AST-computed dependency set (schedule.py::query_deps); these
+tests pin the derivation and the dependency engine against known ground
 truth so a silent under-attribution can't reopen the gap.
 """
 
 import pytest
 
 from datafusion_bigtable_spark import queries as q
+from datafusion_bigtable_spark import schedule as s
 
 PKG = "datafusion_bigtable_spark"
 
@@ -64,16 +65,17 @@ def test_registry_size_and_full_green_fold():
     # retrieval_hybrid_saved, streaming_postings_delete,
     # streaming_ivf_delete).
     assert len(q.REGISTRY) == 184
-    sched = q._schedule()
-    for name in (n for n in q.REGISTRY if n not in q._LAST_GREEN):
+    sched = s._schedule()
+    greens = s._correctness_records()
+    for name in (n for n in q.REGISTRY if n not in greens):
         assert sched.index(name) < 50, f"new query {name} outside driver window"
 
 
 def test_window_contains_all_stale_and_touched():
     """Every query that most needs verification sorts into the 50-slot window."""
-    sched = q._schedule()
+    sched = s._schedule()
     window = set(sched[:50])
-    greens = {n: q._last_green(n) for n in q.REGISTRY}
+    greens = {n: s._last_green(n) for n in q.REGISTRY}
     # Anything reset (0) or 2+ rounds stale must be inside the window...
     must_verify = {n for n, g in greens.items() if g <= 2}
     overflow = must_verify - window
@@ -89,27 +91,10 @@ def test_window_contains_all_stale_and_touched():
         )
 
 
-def test_reset_exemptions_are_live_and_safe():
-    """Every _RESET_EXEMPT_QUERIES entry must (a) actually be suppressing a
-    module-closure reset right now — otherwise the exemption is stale and
-    must be deleted at the fold — and (b) have a prior driver-green to fall
-    back on (an exemption may only defer re-verification of a known-green
-    query, never hide a never-verified one)."""
-    for name in q._RESET_EXEMPT_QUERIES:
-        assert name in q.REGISTRY, f"exempt query {name} not in registry"
-        assert q.query_deps(name) & q._TOUCHED_MODULES, (
-            f"stale exemption: {name} is no longer reset by any touched module"
-        )
-        assert name in q._LAST_GREEN, f"exemption hides never-green query {name}"
-        assert name not in q._TOUCHED_QUERIES, (
-            f"{name} is explicitly touched — exemption must not override that"
-        )
-
-
 def test_touched_query_outranks_stale_green():
     # Reset-to-0 sorts strictly before every non-zero green.
-    sched = q._schedule()
-    greens = [q._last_green(n) for n in sched]
+    sched = s._schedule()
+    greens = [s._last_green(n) for n in sched]
     assert greens == sorted(greens)
 
 
@@ -139,39 +124,47 @@ def test_touched_query_outranks_stale_green():
     ],
 )
 def test_query_deps_ground_truth(name, expected_subset):
-    deps = q.query_deps(name)
+    deps = s.query_deps(name)
     assert expected_subset <= deps, f"{name}: missing {expected_subset - deps}"
+
+
+def test_same_file_helpers_contribute_direct_deps():
+    # bt_limit_pushdown imports sources.datasource itself; sources.cells is
+    # imported only by its _bt_events_store helper.  The module closure of
+    # datasource would mask a lost helper (datasource imports cells), so the
+    # helper walk is pinned on the direct set.
+    fn = q.REGISTRY["bt_limit_pushdown"].fn
+    assert _m("sources.cells") in s._callable_direct_deps(fn, {fn})
 
 
 def test_pure_dataframe_queries_have_no_package_deps():
     # TPC-H queries run on stock Spark SQL — a nonempty dep set would mean
     # the AST engine is over-attributing (false resets shrink the window).
     for name in ("tpch_q1_pricing_summary", "tpch_q6_revenue_change", "union_all_entities"):
-        assert q.query_deps(name) == frozenset(), name
+        assert s.query_deps(name) == frozenset(), name
 
 
 def test_module_touch_resets_dependents(monkeypatch):
-    monkeypatch.setattr(q, "_TOUCHED_MODULES", frozenset({_m("operators.graph")}))
-    q.query_deps.cache_clear()
+    monkeypatch.setattr(s, "_TOUCHED_MODULES", frozenset({_m("operators.graph")}))
+    s.query_deps.cache_clear()
     try:
-        assert q._last_green("dedup_connected_components") == 0
-        assert q._last_green("dedup_keep_canonical") == 0  # CC under the hood
-        assert q._last_green("dedup_exact") != 0  # no graph dependency
-        sched = q._schedule()
+        assert s._last_green("dedup_connected_components") == 0
+        assert s._last_green("dedup_keep_canonical") == 0  # CC under the hood
+        assert s._last_green("dedup_exact") != 0  # no graph dependency
+        sched = s._schedule()
         assert sched.index("dedup_connected_components") < 50
     finally:
-        q.query_deps.cache_clear()
+        s.query_deps.cache_clear()
 
 
 def test_every_correctness_artifact_is_folded():
     """r9 skipped the fold and the driver window froze (VERDICT r9 #1).
 
-    Pin: for EVERY committed CORRECTNESS_r{N}.json, an ``_R{N}_GREEN``
-    tuple must exist in queries.py and every fully-green query in the
-    artifact must carry ``_LAST_GREEN[name] >= N`` (a later round may
-    override upward; a touched-this-round reset happens in
-    ``_last_green()``, not in the dict).  Forgetting the fold for a new
-    round now fails here instead of silently repeating the window.
+    Pin: for EVERY committed CORRECTNESS_r{N}.json, every fully-green
+    query in the artifact must carry a derived driver-green round >= N (a
+    later round may override upward; a touched-this-round reset happens in
+    ``_last_green()``, not in the derived records).  The fold is computed
+    from the artifacts, so a new artifact needs no code edit to land.
     """
     import json
     from pathlib import Path
@@ -179,10 +172,9 @@ def test_every_correctness_artifact_is_folded():
     repo = Path(q.__file__).resolve().parents[1]
     artifacts = sorted(repo.glob("CORRECTNESS_r*.json"))
     assert artifacts, "no correctness artifacts found next to the package"
+    folded = s._correctness_records()
     for art in artifacts:
         n = int(art.stem.split("_r")[1])
-        tup = getattr(q, f"_R{n}_GREEN", None)
-        assert tup is not None, f"{art.name} not folded: no _R{n}_GREEN tuple"
         rec = json.loads(art.read_text())
         greens = {
             name
@@ -195,7 +187,7 @@ def test_every_correctness_artifact_is_folded():
         missing = {
             name
             for name in greens
-            if name in q.REGISTRY and q._LAST_GREEN.get(name, 0) < n
+            if name in q.REGISTRY and folded.get(name, 0) < n
         }
         assert missing == set(), f"{art.name} greens unfolded: {sorted(missing)}"
 
@@ -203,9 +195,14 @@ def test_every_correctness_artifact_is_folded():
 def test_touched_queries_lead_current_window():
     # Explicitly-touched queries (green=0 by fiat) must sit inside the
     # 50-slot driver window — they are the round's highest-risk entries.
-    sched = q._schedule()
-    for name in q._TOUCHED_QUERIES:
+    sched = s._schedule()
+    for name in s._TOUCHED_QUERIES:
+        assert name in q.REGISTRY, f"touched query {name} is not registered"
         assert sched.index(name) < 50, f"touched query {name} outside window"
+    # A misspelt module would silently reset nothing: every hand-kept entry
+    # must name a real package module.
+    for module in s._TOUCHED_MODULES:
+        assert s._module_path(module) is not None, f"touched module {module} not found"
 
 
 def test_fullgate_proven_modules_cite_committed_evidence():
@@ -214,27 +211,30 @@ def test_fullgate_proven_modules_cite_committed_evidence():
     entry in _FULLGATE_PROVEN_MODULES: (a) the key is a real package module
     and not ALSO in _TOUCHED_MODULES (pick one posture), (b) the cited
     artifact exists at the repo root AND is git-committed, (c) its round
-    postdates the last _R{N}_GREEN fold — evidence generated before the fold
-    cannot cover an edit made after it, and (d) every registry query whose
-    dependency closure includes the module is fully green in it."""
+    postdates the newest committed CORRECTNESS_r{N}.json — evidence
+    generated before that round closed cannot cover an edit made after it,
+    and (d) every registry query whose dependency closure includes the
+    module is fully green in it."""
     import json
     import re
     import subprocess
     from pathlib import Path
 
     repo = Path(q.__file__).resolve().parents[1]
-    last_fold = max(
-        int(m.group(1)) for name in dir(q) if (m := re.fullmatch(r"_R(\d+)_GREEN", name))
-    )
     committed = set(
         subprocess.run(
             ["git", "ls-files"], cwd=repo, capture_output=True, text=True, check=True
         ).stdout.splitlines()
     )
+    last_fold = max(
+        int(m.group(1))
+        for name in committed
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", name))
+    )
     assert "tools/full_gate.py" in committed, "full-gate tool must be committed"
-    for module, artifact in q._FULLGATE_PROVEN_MODULES.items():
-        assert q._module_path(module) is not None, f"unknown module {module}"
-        assert module not in q._TOUCHED_MODULES, (
+    for module, artifact in s._FULLGATE_PROVEN_MODULES.items():
+        assert s._module_path(module) is not None, f"unknown module {module}"
+        assert module not in s._TOUCHED_MODULES, (
             f"{module} both touched and fullgate-proven — contradictory"
         )
         path = repo / artifact
@@ -245,7 +245,7 @@ def test_fullgate_proven_modules_cite_committed_evidence():
             f"{artifact} (round {payload['round']}) predates the r{last_fold} "
             f"fold — stale evidence for {module}"
         )
-        dependents = {n for n in q.REGISTRY if module in q.query_deps(n)}
+        dependents = {n for n in q.REGISTRY if module in s.query_deps(n)}
         assert dependents, f"{module} has no dependents — listing it is pointless"
         # Dependents already guaranteed a driver-window slot (new queries,
         # _TOUCHED_QUERIES, other-module resets — all zero driver-green)
@@ -254,7 +254,7 @@ def test_fullgate_proven_modules_cite_committed_evidence():
         not_green = {
             n
             for n in dependents
-            if q._last_green(n) > 0 and payload["results"].get(n) != "green"
+            if s._last_green(n) > 0 and payload["results"].get(n) != "green"
         }
         assert not_green == set(), (
             f"{artifact} does not prove {module}'s dependents green: "
@@ -265,9 +265,9 @@ def test_fullgate_proven_modules_cite_committed_evidence():
 def test_fullgate_tiebreak_never_outranks_driver_green(monkeypatch):
     # A full-gate green is a SECONDARY key: zero-driver-green queries sort
     # before every driver-green query regardless of full-gate recency.
-    monkeypatch.setattr(q, "_fullgate_records", lambda: {"dedup_exact": 99})
-    sched = q._schedule()
-    greens = [q._last_green(n) for n in sched]
+    monkeypatch.setattr(s, "_fullgate_records", lambda: {"dedup_exact": 99})
+    sched = s._schedule()
+    greens = [s._last_green(n) for n in sched]
     assert greens == sorted(greens)
 
 
@@ -275,7 +275,7 @@ def test_transitive_module_imports_followed():
     # operators.dedup imports operators.graph only indirectly through the
     # keep-canonical path; closure must include it for CC-based queries even
     # if the query only imports dedup.
-    closure = q._module_closure({_m("operators.dedup")})
+    closure = s._module_closure({_m("operators.dedup")})
     assert _m("operators.dedup") in closure
 
 
@@ -291,14 +291,52 @@ def test_fullgate_records_refresh_when_an_artifact_lands_mid_session():
     repo = Path(q.__file__).resolve().parents[1]
     art = repo / "FULLGATE_r9998.json"
     assert not art.exists()
-    before = q._fullgate_records().get("dedup_exact", 0)
+    before = s._fullgate_records().get("dedup_exact", 0)
     assert before < 9998
     try:
         art.write_text(json.dumps({"round": 9998, "results": {"dedup_exact": "green"}}))
-        assert q._fullgate_records()["dedup_exact"] == 9998
+        assert s._fullgate_records()["dedup_exact"] == 9998
     finally:
         art.unlink()
-    assert q._fullgate_records().get("dedup_exact", 0) == before
+    assert s._fullgate_records().get("dedup_exact", 0) == before
+
+
+def test_correctness_records_refresh_when_an_artifact_lands_mid_session():
+    """The driver-green fold is derived from the committed CORRECTNESS
+    artifacts, so committing a new one changes the schedule with no code
+    edit — within the same session, because the cache keys on the
+    artifact set.  Only a fully-green record counts: a hash mismatch or an
+    error leaves the query's round where it was, and removing the artifact
+    restores the old value."""
+    import json
+    from pathlib import Path
+
+    repo = Path(q.__file__).resolve().parents[1]
+    art = repo / "CORRECTNESS_r9998.json"
+    assert not art.exists()
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    before = dict(s._correctness_records())
+    names = ("dedup_exact", "tpch_q1_pricing_summary", "tpch_q6_revenue_change")
+    assert all(0 < before[n] < 9998 for n in names)
+    try:
+        art.write_text(
+            json.dumps(
+                {
+                    names[0]: ok,
+                    names[1]: {**ok, "hash_match": False},
+                    names[2]: {**ok, "err": "AnalysisException: boom"},
+                }
+            )
+        )
+        after = s._correctness_records()
+        assert after[names[0]] == 9998
+        assert s._last_green(names[0]) == 9998
+        assert after[names[1]] == before[names[1]]
+        assert after[names[2]] == before[names[2]]
+        assert s._schedule()[-1] == names[0]
+    finally:
+        art.unlink()
+    assert s._correctness_records() == before
 
 
 def test_content_tag_format_is_frozen(tmp_path):

@@ -4,14 +4,16 @@ compare, the same discipline as tests/oracle_harness.compare and the driver's
 50-slot window, but over ALL queries.
 
 The committed output (``FULLGATE_r{N}.json`` at the repo root) is a dated
-verification record the schedule in queries.py consumes two ways:
+verification record the schedule in ``datafusion_bigtable_spark/schedule.py``
+consumes two ways:
 
 1. A module with a behavior-changing edit whose dependents would overflow
    the 50-slot driver window may be recorded in
-   ``queries._FULLGATE_PROVEN_MODULES`` citing the artifact instead of being
+   ``schedule._FULLGATE_PROVEN_MODULES`` citing the artifact instead of being
    added to ``_TOUCHED_MODULES`` — tests/test_schedule.py verifies the cited
-   artifact is committed, postdates the last fold, and shows every dependent
-   green.  This replaces the r11/r12 judgment-call exemptions with evidence.
+   artifact is committed, is of a later round than the newest committed
+   ``CORRECTNESS_r{N}.json``, and shows every dependent green.  This
+   replaces the r11/r12 judgment-call exemptions with evidence.
 2. ``_schedule()`` breaks driver-green ties by full-gate recency, so a
    query a committed full gate re-proved recently yields its window slot to
    one nothing re-proved.
